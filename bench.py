@@ -438,9 +438,13 @@ def main() -> None:
         "full": full_name,
     }
     if errors:
-        # errors are load-bearing for the driver; cap each message so
-        # a long traceback line cannot evict the queries dict
-        summary["errors"] = {n: m[:80] for n, m in errors.items()}
+        # errors are load-bearing; cap each message, and the dict at
+        # its first 5 rows in registry order, so many failing rows
+        # cannot push the line past the capture window (the full dict
+        # stays in the per-run payload)
+        shown = dict(list(errors.items())[:5])
+        summary["errors"] = {n: m[:80] for n, m in shown.items()}
+        summary["errors_omitted"] = len(errors) - len(shown)
     # calibration endpoints only; the per-segment marks live in the
     # full payload (they were ~120 chars of the old line)
     summary["calibration"] = {"before": cal_before, "after": cal_after}

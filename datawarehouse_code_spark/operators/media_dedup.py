@@ -25,11 +25,10 @@ verified EXACTLY afterwards: candidates are re-checked with the full
 Scale shape (the 100 TB story):
 - Hashing is a narrow Arrow-batched map over the media table; pixels
   never leave the worker — only (media_id, 4 band ints, hash) does.
-- The pair join buckets on (band_idx, band_val) with a hot-band cap
-  (distinct media per bucket ≤ `band_cap`): a constant-color artifact
-  class (tracking pixels, solid thumbnails) all hash to dhash 0 and
-  would otherwise hand the self-join a quadratic bucket.  Capped
-  BEFORE the join, like every hot-key guard in this engine.
+- The pair join buckets on (band_idx, band_val) through the shared
+  operators/buckets.py primitives, hot bands capped at `band_cap`
+  distinct media: a constant-color artifact class (tracking pixels,
+  solid thumbnails) all hash to dhash 0.
 - The persisted index is 4 rows per image; increments equi-join it at
   |increment| cost and never re-hash the corpus.
 - Right-to-be-forgotten: operators/corpus.py forget_index_rows with
@@ -43,11 +42,16 @@ surface for LLM training-data curation, built Spark-first.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from datawarehouse_code_spark.operators.buckets import (
+    cap_hot_keys,
+    match_increment,
+    shared_key_pairs,
+    shares_at_least,
+)
 
 DHASH_SCHEMA = (
     "media_id BIGINT, b0 INT, b1 INT, b2 INT, b3 INT, dhash BIGINT"
@@ -236,42 +240,36 @@ def image_phash(media: DataFrame, skip_small: bool = False) -> DataFrame:
     the 32x32 grid (r13 ADVICE — a `size=` knob that raised on every
     value but 32 was dead API surface; phash_bits keeps the real
     parameter for other grids)."""
-    import numpy as np
-
-    from datawarehouse_code_spark.operators.multimodal import decode_image
-
     size = PHASH_SIZE
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, bands = [], []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                if content is None:
-                    continue
-                w, h, ch, px = decode_image(bytes(content))
-                if skip_small and (w < size or h < size):
-                    continue
-                ids.append(media_id)
-                bands.append(phash_bits(w, h, ch, px, size=size))
-            b = np.array(bands, dtype=np.uint64).reshape(len(ids), 4)
-            ph = (
-                b[:, 0]
-                | (b[:, 1] << np.uint64(16))
-                | (b[:, 2] << np.uint64(32))
-                | (b[:, 3] << np.uint64(48))
-            ).view(np.int64)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "b0": pd.Series(b[:, 0].astype(np.int32), dtype="int32"),
-                    "b1": pd.Series(b[:, 1].astype(np.int32), dtype="int32"),
-                    "b2": pd.Series(b[:, 2].astype(np.int32), dtype="int32"),
-                    "b3": pd.Series(b[:, 3].astype(np.int32), dtype="int32"),
-                    "phash": pd.Series(ph, dtype="int64"),
-                }
-            )
+    def bits(w, h, ch, px):
+        if skip_small and (w < size or h < size):
+            return None
+        return (phash_bits(w, h, ch, px, size=size),)
 
-    return media.mapInPandas(batches, PHASH_SCHEMA)
+    return _band_hash_map(media, bits, PHASH_SCHEMA)
+
+
+def _band_hash_map(media: DataFrame, bits_fn, schema: str) -> DataFrame:
+    """The image hash tables on the shared _decode_map:
+    `bits_fn(w, h, ch, px)` → one tuple of four 16-bit band values per
+    hash algo in `schema` (None leaves that algo's columns NULL),
+    emitted as the bands plus their _pack64 BIGINT; `bits_fn`
+    returning None yields no row.  The hash runs inside the decode
+    step, so a raster a hash rejects quarantines like a bad payload."""
+    from datawarehouse_code_spark.operators.multimodal import decode_image
+
+    def rows(hashes):
+        if hashes is None:
+            return []
+        return [tuple(
+            v for t in hashes
+            for v in ((None,) * 5 if t is None else (*t, _pack64(t)))
+        )]
+
+    return _decode_map(
+        media, lambda payload: bits_fn(*decode_image(payload)), rows, schema
+    )
 
 
 def image_dhash(media: DataFrame, grid: int = 8) -> DataFrame:
@@ -290,81 +288,68 @@ def image_dhash(media: DataFrame, grid: int = 8) -> DataFrame:
     reusable at other grids, but this table's band layout is a
     contract shared with the index, the matchers and the oracles, so
     any other value fails loudly here rather than mis-packing."""
-    import numpy as np
-
-    from datawarehouse_code_spark.operators.multimodal import decode_image
-
     if grid != 8:
         raise ValueError(
             f"image_dhash's band schema is fixed at grid=8 (got {grid}); "
             "use dhash_bits directly for other grids"
         )
+    return _band_hash_map(
+        media,
+        lambda w, h, ch, px: (dhash_bits(w, h, ch, px, grid=grid),),
+        DHASH_SCHEMA,
+    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, bands = [], []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                if content is None:
-                    continue
-                w, h, ch, px = decode_image(bytes(content))
-                ids.append(media_id)
-                bands.append(dhash_bits(w, h, ch, px, grid=grid))
-            b = np.array(bands, dtype=np.uint64).reshape(len(ids), 4)
-            dh = (
-                b[:, 0]
-                | (b[:, 1] << np.uint64(16))
-                | (b[:, 2] << np.uint64(32))
-                | (b[:, 3] << np.uint64(48))
-            ).view(np.int64)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "b0": pd.Series(b[:, 0].astype(np.int32), dtype="int32"),
-                    "b1": pd.Series(b[:, 1].astype(np.int32), dtype="int32"),
-                    "b2": pd.Series(b[:, 2].astype(np.int32), dtype="int32"),
-                    "b3": pd.Series(b[:, 3].astype(np.int32), dtype="int32"),
-                    "dhash": pd.Series(dh, dtype="int64"),
-                }
-            )
 
-    return media.mapInPandas(batches, DHASH_SCHEMA)
+# the band bucket key and the stacked explode producing it; the index
+# side of every band join renames the full hash's bands to c0..c3
+_BAND_KEY = ["band_idx", "band_val"]
+_BAND_STACK = "stack(4, 0, b0, 1, b1, 2, b2, 3, b3) AS (band_idx, band_val)"
+_BANDS = ["b0", "b1", "b2", "b3"]
 
 
 def _explode_bands(hashes: DataFrame) -> DataFrame:
     """(media_id, b0..b3) → one row per band: (media_id, band_idx,
     band_val, b0..b3) — the bucketing key plus the full hash carried
     along so candidate verification needs no second join."""
-    return hashes.select(
-        "media_id", "b0", "b1", "b2", "b3",
-        F.expr(
-            "stack(4, 0, b0, 1, b1, 2, b2, 3, b3) AS (band_idx, band_val)"
-        ),
-    )
+    return hashes.select("media_id", *_BANDS, F.expr(_BAND_STACK))
 
 
-def _cap_hot_bands(
-    bands: DataFrame, cap: int, id_col: str = "media_id"
-) -> DataFrame:
-    """Drop band buckets carried by more than `cap` DISTINCT media —
-    the quadratic-bucket guard (same distinct-carrier grain as
-    cap_hot_chunks)."""
-    cold = (
-        bands.groupBy("band_idx", "band_val")
-        .agg(F.countDistinct(id_col).alias("_k"))
-        .filter(F.col("_k") <= cap)
-        .select("band_idx", "band_val")
-    )
-    return bands.join(cold, ["band_idx", "band_val"], "left_semi")
+def _corpus_bands() -> list[F.Column]:
+    return [F.col(f"b{k}").alias(f"c{k}") for k in range(4)]
 
 
-def _hamming64() -> F.Column:
-    """Exact 64-bit hamming distance from the paired band columns."""
-    return sum(
+def _hamming_verify(max_hamming: int) -> dict:
+    """The band families' exact verify, as shared_key_pairs /
+    match_increment keywords: the full 64-bit hamming distance from
+    the paired band columns, min over the shared bands, kept at ≤
+    `max_hamming` — band collisions only propose candidates, so false
+    bucket collisions never survive."""
+    hamming = sum(
         F.bit_count(
             F.col(f"b{k}").bitwiseXOR(F.col(f"c{k}")).cast("bigint")
         )
         for k in range(4)
     ).cast("int")
+    return {
+        "verify": ("hamming", hamming),
+        "aggs": [
+            F.count(F.lit(1)).cast("int").alias("n_shared_bands"),
+            F.min("hamming").alias("hamming"),
+        ],
+        "having": F.col("hamming") <= max_hamming,
+    }
+
+
+def _capped_band_index(
+    index: DataFrame, band_cap: int, id_alias: str, *extra: str
+) -> DataFrame:
+    """A band index hot-capped at `band_cap` distinct media, projected
+    as the index side of a band join: (id AS `id_alias`, *extra,
+    band_idx, band_val, c0..c3)."""
+    return cap_hot_keys(index, _BAND_KEY, "media_id", band_cap).select(
+        F.col("media_id").alias(id_alias), *extra, *_BAND_KEY,
+        *_corpus_bands(),
+    )
 
 
 def dhash_near_dup_pairs(
@@ -376,38 +361,22 @@ def dhash_near_dup_pairs(
     the four 16-bit bands (hot buckets capped at `band_cap` distinct
     media BEFORE the self-join), then verify every candidate pair with
     the exact 64-bit hamming distance — (d1, d2, n_shared_bands,
-    hamming) for pairs at distance ≤ `max_hamming`.  Bucket-then-
-    verify: band collisions only propose candidates; the hamming check
-    is exact, so precision is 1.0 by construction and recall is the
-    banded-LSH guarantee (any pair whose flipped bits leave one band
-    clean is proposed — always true for hamming ≤ 3 here, pigeonhole
-    over 4 bands... exactly: ≤ 3 flips occupy ≤ 3 bands).
+    hamming) for pairs at distance ≤ `max_hamming`.  Precision is 1.0
+    by construction and recall is the banded-LSH guarantee (any pair
+    whose flipped bits leave one band clean is proposed — always true
+    for hamming ≤ 3 here: ≤ 3 flips occupy ≤ 3 bands).
 
     The band table feeds four consumers (the cap's carrier count +
     semi-join, both self-join sides), so it is materialized once with
     an ephemeral localCheckpoint — the winnowing-fingerprint
     precedent; without it the decode+hash map re-runs per consumer."""
-    bands = _cap_hot_bands(
-        _explode_bands(hashes).localCheckpoint(), band_cap
+    bands = cap_hot_keys(
+        _explode_bands(hashes).localCheckpoint(), _BAND_KEY, "media_id",
+        band_cap,
     )
-    left = bands.select(
-        F.col("media_id").alias("d1"), "band_idx", "band_val",
-        "b0", "b1", "b2", "b3",
-    )
-    right = bands.select(
-        F.col("media_id").alias("d2"), "band_idx", "band_val",
-        *[F.col(f"b{k}").alias(f"c{k}") for k in range(4)],
-    )
-    return (
-        left.join(right, ["band_idx", "band_val"])
-        .filter(F.col("d1") < F.col("d2"))
-        .withColumn("hamming", _hamming64())
-        .groupBy("d1", "d2")
-        .agg(
-            F.count(F.lit(1)).cast("int").alias("n_shared_bands"),
-            F.min("hamming").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
+    return shared_key_pairs(
+        bands, _BAND_KEY, "media_id", left=_BANDS, right=_corpus_bands(),
+        **_hamming_verify(max_hamming),
     )
 
 
@@ -421,10 +390,8 @@ def build_dhash_index(
     rows per image, computed ONCE per corpus build and stored beside
     it (the image sibling of build_cdc_index / build_winnowing_index).
     Increments (`dhash_matches_incremental`) equi-join this table and
-    never re-decode the corpus.  The hot-band cap is applied at READ
-    time by the incremental matcher (append-only maintenance can only
-    push a bucket's carrier count up — capping at read keeps stream
-    replays idempotent, the cap_hot_chunks rationale).  RTBF:
+    never re-decode the corpus; the hot-band cap is applied at READ
+    time (buckets.cap_hot_keys).  RTBF:
     forget_index_rows(…, id_col='media_id').  `hashes` (an
     image_dhash output) shares a materialized hash table across
     consumers, as the CDC operators' chunks= pass-through."""
@@ -453,23 +420,11 @@ def dhash_matches_incremental(
     if new_hashes is None:
         new_hashes = image_dhash(new_media, grid=grid)
     inc = _explode_bands(new_hashes).select(
-        F.col("media_id").alias("d_new"), "band_idx", "band_val",
-        "b0", "b1", "b2", "b3",
+        F.col("media_id").alias("d_new"), *_BAND_KEY, *_BANDS,
     )
-    idx = _cap_hot_bands(index, band_cap).select(
-        F.col("media_id").alias("d_corpus"), "band_idx", "band_val",
-        *[F.col(f"b{k}").alias(f"c{k}") for k in range(4)],
-    )
-    return (
-        inc.join(idx, ["band_idx", "band_val"])
-        .filter(F.col("d_new") != F.col("d_corpus"))
-        .withColumn("hamming", _hamming64())
-        .groupBy("d_new", "d_corpus")
-        .agg(
-            F.count(F.lit(1)).cast("int").alias("n_shared_bands"),
-            F.min("hamming").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
+    return match_increment(
+        inc, _capped_band_index(index, band_cap, "d_corpus"), _BAND_KEY,
+        ("d_new", "d_corpus"), **_hamming_verify(max_hamming),
     )
 
 
@@ -530,45 +485,108 @@ def audio_fingerprints(
     narrow Arrow-batched map + one distinct; samples never leave the
     worker.  (win, hop, gram, qshift) are the index contract —
     increments must pass the same values."""
-    import pandas as pd  # noqa: F811 — worker-side import
+    return _decode_map(
+        media, *_audio_fp_fns(win, hop, gram, qshift), AUDIO_FP_SCHEMA
+    ).distinct()
 
+
+def _audio_fp_fns(win: int, hop: int, gram: int, qshift: int):
+    """(decode_fn, rows_fn) of the audio fingerprint: PCM decode, then
+    channel 0's distinct fingerprint strings as (fp,) rows."""
     from datawarehouse_code_spark.operators.multimodal import decode_audio
+
+    return (
+        lambda payload: decode_audio(payload)[3],
+        lambda arr: [
+            (fp,) for fp in set(
+                audio_fp_strings(arr[:, 0], win, hop, gram, qshift)
+            )
+        ],
+    )
+
+
+def _decode_map(
+    media: DataFrame, decode_fn, rows_fn, schema: str
+) -> DataFrame:
+    """The narrow Arrow-batched map every hash and fingerprint table
+    rides: per payload, `decode_fn(bytes)`, then `rows_fn(decoded)` →
+    value tuples for `schema`'s columns after media_id (and before
+    decode_error); samples, frames and pixels never leave the worker.  NULL payloads
+    yield no row and decode failures raise — unless `schema` ends in a
+    decode_error column (the QUARANTINE lane): then a NULL or
+    undecodable payload (ValueError / NotImplementedError) yields ONE
+    row with every value NULL and the error string, healthy rows carry
+    decode_error NULL, and a row-less healthy item yields no row
+    either way.  STRING columns ride as object, INT/BIGINT as
+    nullable ints."""
+    fields = [f.split() for f in schema.split(",")]
+    quarantine = fields[-1][0] == "decode_error"
+    values = fields[1:-1] if quarantine else fields[1:]
+    nullable = {"INT": "Int32", "BIGINT": "Int64"}
 
     def batches(it):
         for pdf in it:
-            ids, fps = [], []
+            ids, rows, errs = [], [], []
             for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                if content is None:
+                err = "null payload"
+                if content is not None:
+                    try:
+                        decoded, err = decode_fn(bytes(content)), None
+                    except (ValueError, NotImplementedError) as e:
+                        if not quarantine:
+                            raise
+                        err = f"{type(e).__name__}: {e}"
+                if err is not None:
+                    if quarantine:
+                        ids.append(media_id)
+                        rows.append((None,) * len(values))
+                        errs.append(err)
                     continue
-                _rate, _ch, _n, arr = decode_audio(bytes(content))
-                for fp in set(
-                    audio_fp_strings(arr[:, 0], win, hop, gram, qshift)
-                ):
+                for row in rows_fn(decoded):
                     ids.append(media_id)
-                    fps.append(fp)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "fp": pd.Series(fps, dtype=object),
-                }
-            )
+                    rows.append(row)
+                    errs.append(None)
+            cols = {"media_id": pd.Series(ids, dtype="int64")}
+            for j, (name, typ) in enumerate(values):
+                col = [r[j] for r in rows]
+                cols[name] = (
+                    pd.Series(col, dtype=object) if typ == "STRING"
+                    else pd.array(col, dtype=nullable[typ])
+                )
+            if quarantine:
+                cols["decode_error"] = pd.Series(errs, dtype=object)
+            yield pd.DataFrame(cols)
 
-    return media.mapInPandas(batches, AUDIO_FP_SCHEMA).distinct()
+    return media.mapInPandas(batches, schema)
 
 
-def _cap_hot_fps(
-    fps: DataFrame, cap: int, id_col: str = "media_id"
+def _fp_share_pairs(
+    fps: DataFrame, min_shared: int, hot_cap: int
 ) -> DataFrame:
-    """Drop fingerprints carried by more than `cap` DISTINCT media —
-    digital silence and loop boilerplate are the audio analogues of
-    the constant-color image and the boilerplate chunk."""
-    cold = (
-        fps.groupBy("fp")
-        .agg(F.countDistinct(id_col).alias("_k"))
-        .filter(F.col("_k") <= cap)
-        .select("fp")
+    """(d1, d2, n_shared) for media sharing ≥ `min_shared` distinct
+    fingerprints of a (media_id, fp) table, hot fingerprints capped at
+    `hot_cap` distinct carriers BEFORE the self-join — digital silence,
+    loop boilerplate and black-frame loops are the hot keys.  Shared
+    by the audio and video detectors and their streaming gates."""
+    return shared_key_pairs(
+        cap_hot_keys(fps, ["fp"], "media_id", hot_cap), ["fp"], "media_id",
+        **shares_at_least(min_shared),
     )
-    return fps.join(cold, "fp", "left_semi")
+
+
+def _fp_share_matches(
+    new_fps: DataFrame, index: DataFrame, min_shared: int, hot_cap: int
+) -> DataFrame:
+    """(d_new, d_corpus, n_shared) between an increment's (media_id,
+    fp) rows and a persisted fingerprint index read-time-capped at
+    `hot_cap` distinct carriers."""
+    return match_increment(
+        new_fps.select(F.col("media_id").alias("d_new"), "fp"),
+        cap_hot_keys(index, ["fp"], "media_id", hot_cap).select(
+            F.col("media_id").alias("d_corpus"), "fp"
+        ),
+        ["fp"], ("d_new", "d_corpus"), **shares_at_least(min_shared),
+    )
 
 
 def audio_near_dup_pairs(
@@ -582,24 +600,15 @@ def audio_near_dup_pairs(
 ) -> DataFrame:
     """Audio near-dup pairs: (d1, d2, n_shared) for media sharing ≥
     `min_shared` distinct fingerprints, hot fingerprints capped at
-    `hot_cap` distinct carriers BEFORE the self-join (the quadratic-
-    bucket guard).  A copy shifted by m·hop samples shares all
-    overlapping grams with its source — the shift-robustness fixed
-    framings lack, at hop-sample granularity.  The fingerprint table
-    feeds four consumers (cap + both join sides) and is materialized
-    once via localCheckpoint, the winnowing precedent."""
-    fps = _cap_hot_fps(
+    `hot_cap` distinct carriers BEFORE the self-join.  A copy shifted
+    by m·hop samples shares all overlapping grams with its source —
+    the shift-robustness fixed framings lack, at hop-sample
+    granularity.  The fingerprint table feeds four consumers (cap +
+    both join sides) and is materialized once via localCheckpoint, the
+    winnowing precedent."""
+    return _fp_share_pairs(
         audio_fingerprints(media, win, hop, gram, qshift).localCheckpoint(),
-        hot_cap,
-    )
-    a = fps.select(F.col("media_id").alias("d1"), "fp")
-    b = fps.select(F.col("media_id").alias("d2"), "fp")
-    return (
-        a.join(b, "fp")
-        .filter(F.col("d1") < F.col("d2"))
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+        min_shared, hot_cap,
     )
 
 
@@ -612,10 +621,9 @@ def build_audio_fp_index(
 ) -> DataFrame:
     """The persisted audio fingerprint index: (media_id, fp) distinct,
     computed ONCE per corpus build (the audio sibling of
-    build_winnowing_index).  The hot-fp cap is applied at READ time by
-    the incremental matcher (append-only maintenance only pushes
-    carrier counts up — read-time capping keeps replays idempotent).
-    RTBF: forget_index_rows(…, id_col='media_id')."""
+    build_winnowing_index); the hot-fp cap is applied at READ time
+    (buckets.cap_hot_keys).  RTBF: forget_index_rows(…,
+    id_col='media_id')."""
     return audio_fingerprints(media, win, hop, gram, qshift)
 
 
@@ -634,19 +642,21 @@ def audio_matches_incremental(
     decoded and fingerprinted fresh, the corpus is never re-decoded
     beyond the index equi-join, so cost scales with |increment|.
     Parameters must match the index build."""
-    inc = audio_fingerprints(new_media, win, hop, gram, qshift).select(
-        F.col("media_id").alias("d_new"), "fp"
+    return _fp_share_matches(
+        audio_fingerprints(new_media, win, hop, gram, qshift), index,
+        min_shared, hot_cap,
     )
-    idx = _cap_hot_fps(index, hot_cap).select(
-        F.col("media_id").alias("d_corpus"), "fp"
-    )
-    return (
-        inc.join(idx, "fp")
-        .filter(F.col("d_new") != F.col("d_corpus"))
-        .groupBy("d_new", "d_corpus")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )
+
+
+def _pack64(bands) -> int:
+    """Four 16-bit bands packed little-endian into a signed 64-bit
+    int (the image_dhash `dhash` BIGINT)."""
+    import numpy as np
+
+    u = np.uint64(0)
+    for k, b in enumerate(bands):
+        u |= np.uint64(b) << np.uint64(16 * k)
+    return int(u.view(np.int64))
 
 
 DHASH_QUARANTINE_SCHEMA = DHASH_SCHEMA + ", decode_error STRING"
@@ -661,47 +671,11 @@ def image_dhash_quarantine(media: DataFrame, grid: int = 8) -> DataFrame:
     the error string instead of killing the batch job; healthy rows
     carry decode_error NULL.  Filter on decode_error IS NULL before
     the pair join; route the rest to the quarantine table."""
-    import numpy as np
-
-    from datawarehouse_code_spark.operators.multimodal import decode_image
-
-    def batches(it):
-        for pdf in it:
-            rows = {k: [] for k in
-                    ("media_id", "b0", "b1", "b2", "b3", "dhash", "err")}
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                rows["media_id"].append(media_id)
-                err, bands, dh = None, (None,) * 4, None
-                if content is None:
-                    err = "null payload"
-                else:
-                    try:
-                        w, h, ch, px = decode_image(bytes(content))
-                        bands = dhash_bits(w, h, ch, px, grid=grid)
-                        u = np.uint64(0)
-                        for k, b in enumerate(bands):
-                            u |= np.uint64(b) << np.uint64(16 * k)
-                        dh = int(u.view(np.int64))
-                    except (ValueError, NotImplementedError) as e:
-                        err = f"{type(e).__name__}: {e}"
-                        bands, dh = (None,) * 4, None
-                for k in range(4):
-                    rows[f"b{k}"].append(bands[k])
-                rows["dhash"].append(dh)
-                rows["err"].append(err)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(rows["media_id"], dtype="int64"),
-                    "b0": pd.array(rows["b0"], dtype="Int32"),
-                    "b1": pd.array(rows["b1"], dtype="Int32"),
-                    "b2": pd.array(rows["b2"], dtype="Int32"),
-                    "b3": pd.array(rows["b3"], dtype="Int32"),
-                    "dhash": pd.array(rows["dhash"], dtype="Int64"),
-                    "decode_error": pd.Series(rows["err"], dtype=object),
-                }
-            )
-
-    return media.mapInPandas(batches, DHASH_QUARANTINE_SCHEMA)
+    return _band_hash_map(
+        media,
+        lambda w, h, ch, px: (dhash_bits(w, h, ch, px, grid=grid),),
+        DHASH_QUARANTINE_SCHEMA,
+    )
 
 
 IMAGE_FPS_QUARANTINE_SCHEMA = (
@@ -732,66 +706,16 @@ def image_fingerprints_quarantine(media: DataFrame) -> DataFrame:
     4x16-bit bands, which pins the 8-px dHash grid and the
     PHASH_SIZE downsample — a knob that raised on every other value
     was dead API surface."""
-    import numpy as np
+    size = PHASH_SIZE
 
-    from datawarehouse_code_spark.operators.multimodal import decode_image
+    def bits(w, h, ch, px):
+        small = w < size or h < size
+        return (
+            dhash_bits(w, h, ch, px, grid=8),
+            None if small else phash_bits(w, h, ch, px, size=size),
+        )
 
-    grid, size = 8, PHASH_SIZE
-
-    def _pack64(bands) -> int:
-        u = np.uint64(0)
-        for k, b in enumerate(bands):
-            u |= np.uint64(b) << np.uint64(16 * k)
-        return int(u.view(np.int64))
-
-    def batches(it):
-        for pdf in it:
-            rows = {
-                k: []
-                for k in (
-                    "media_id", "b0", "b1", "b2", "b3", "dhash",
-                    "p0", "p1", "p2", "p3", "phash", "err",
-                )
-            }
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                rows["media_id"].append(media_id)
-                err = None
-                db, dh = (None,) * 4, None
-                pb, ph = (None,) * 4, None
-                if content is None:
-                    err = "null payload"
-                else:
-                    try:
-                        w, h, ch, px = decode_image(bytes(content))
-                        db = dhash_bits(w, h, ch, px, grid=grid)
-                        dh = _pack64(db)
-                        if w >= size and h >= size:
-                            pb = phash_bits(w, h, ch, px, size=size)
-                            ph = _pack64(pb)
-                    except (ValueError, NotImplementedError) as e:
-                        err = f"{type(e).__name__}: {e}"
-                        db, dh, pb, ph = (None,) * 4, None, (None,) * 4, None
-                for k in range(4):
-                    rows[f"b{k}"].append(db[k])
-                    rows[f"p{k}"].append(pb[k])
-                rows["dhash"].append(dh)
-                rows["phash"].append(ph)
-                rows["err"].append(err)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(rows["media_id"], dtype="int64"),
-                    **{
-                        c: pd.array(rows[c], dtype="Int32")
-                        for c in ("b0", "b1", "b2", "b3",
-                                  "p0", "p1", "p2", "p3")
-                    },
-                    "dhash": pd.array(rows["dhash"], dtype="Int64"),
-                    "phash": pd.array(rows["phash"], dtype="Int64"),
-                    "decode_error": pd.Series(rows["err"], dtype=object),
-                }
-            )
-
-    return media.mapInPandas(batches, IMAGE_FPS_QUARANTINE_SCHEMA)
+    return _band_hash_map(media, bits, IMAGE_FPS_QUARANTINE_SCHEMA)
 
 
 def phash_view(fps: DataFrame) -> DataFrame:
@@ -819,36 +743,6 @@ def audio_fingerprints_quarantine(
     string; healthy media yield their distinct fingerprints with
     decode_error NULL (a fingerprint-less healthy item — too short
     for one window — yields no row, same as the fail-loud variant)."""
-    from datawarehouse_code_spark.operators.multimodal import decode_audio
-
-    def batches(it):
-        for pdf in it:
-            ids, fps, errs = [], [], []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                if content is None:
-                    ids.append(media_id)
-                    fps.append(None)
-                    errs.append("null payload")
-                    continue
-                try:
-                    _r, _c, _n, arr = decode_audio(bytes(content))
-                except (ValueError, NotImplementedError) as e:
-                    ids.append(media_id)
-                    fps.append(None)
-                    errs.append(f"{type(e).__name__}: {e}")
-                    continue
-                for fp in set(
-                    audio_fp_strings(arr[:, 0], win, hop, gram, qshift)
-                ):
-                    ids.append(media_id)
-                    fps.append(fp)
-                    errs.append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "fp": pd.Series(fps, dtype=object),
-                    "decode_error": pd.Series(errs, dtype=object),
-                }
-            )
-
-    return media.mapInPandas(batches, FP_QUARANTINE_SCHEMA).distinct()
+    return _decode_map(
+        media, *_audio_fp_fns(win, hop, gram, qshift), FP_QUARANTINE_SCHEMA
+    ).distinct()

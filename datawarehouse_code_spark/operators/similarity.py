@@ -829,6 +829,10 @@ def ivf_topk(
     full corpus, so bucket boundaries are stable across filters (the
     same predicate-agnostic index serves every query).
 
+    Precondition: `vec_id` is unique in `embeddings` (its primary
+    key).  The probed path's cent_id join has no pair dedup, so a
+    duplicated vec_id would emit duplicate pairs into the top-k.
+
     Coarse quantizer: k-means centroids (see kmeans_centroids;
     deterministic seed, optionally sample-fit).  Every vector is
     assigned to its nearest centroid (one broadcast join against the

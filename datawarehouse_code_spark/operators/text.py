@@ -30,6 +30,13 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from datawarehouse_code_spark.operators.buckets import (
+    cap_hot_keys,
+    match_increment,
+    shared_key_pairs,
+    shares_at_least,
+)
+
 _MAX_LONG = (1 << 63) - 1
 _WS_RE = re.compile(r"\s+")
 
@@ -1270,32 +1277,8 @@ def build_cdc_index(
         id_col, "chunk_hash", "n_words"
     )
     if hot_chunk_cap is not None:
-        chunks = cap_hot_chunks(chunks, hot_chunk_cap, id_col=id_col)
+        chunks = cap_hot_keys(chunks, ["chunk_hash"], id_col, hot_chunk_cap)
     return chunks
-
-
-def cap_hot_chunks(
-    index: DataFrame, cap: int, id_col: str = "doc_id"
-) -> DataFrame:
-    """Drop chunk hashes carried by more than `cap` DISTINCT documents
-    — the boilerplate guard, shared by the batch build (applied at
-    build time) and STREAM-MAINTAINED indexes (applied at read time:
-    an append-only stream can only push a chunk's carrier count up, so
-    capping when the index is read keeps replays idempotent while
-    still bounding every increment join's per-chunk fan-out).
-
-    Distinct-document grain (r12, matching build_winnowing_index's cap
-    and the build_cdc_index docstring's rationale): one document
-    repeating a chunk many times must not evict a chunk carried by few
-    documents — the cap measures join fan-out across the corpus, which
-    is carrier count, not occurrence count."""
-    cold = (
-        index.groupBy("chunk_hash")
-        .agg(F.countDistinct(id_col).alias("_k"))
-        .filter(F.col("_k") <= cap)
-        .select("chunk_hash")
-    )
-    return index.join(cold, "chunk_hash", "left_semi")
 
 
 def cdc_matches_incremental(
@@ -1330,18 +1313,14 @@ def cdc_matches_incremental(
     nc = new_chunks.filter(F.col("n_words") >= min_words).select(
         F.col(id_col).alias("d_new"), "chunk_hash", "n_words"
     )
-    idx = index.select(
-        F.col(id_col).alias("d_corpus"), "chunk_hash"
-    )
-    return (
-        nc.join(idx, "chunk_hash")
-        .filter(F.col("d_new") != F.col("d_corpus"))
-        .groupBy("d_new", "d_corpus")
-        .agg(
+    idx = index.select(F.col(id_col).alias("d_corpus"), "chunk_hash")
+    return match_increment(
+        nc, idx, ["chunk_hash"], ("d_new", "d_corpus"),
+        aggs=[
             F.count(F.lit(1)).alias("n_shared_chunks"),
             F.sum("n_words").alias("n_shared_words"),
-        )
-        .filter(F.col("n_shared_chunks") >= min_shared)
+        ],
+        having=F.col("n_shared_chunks") >= min_shared,
     )
 
 
@@ -1376,6 +1355,19 @@ def winnowing_fingerprints(
     No UDF.  The gram count rides from size(ws) computed BEFORE the
     explode (r17): the former per-partition count window was a second
     window pass for a value the generator already knows."""
+    return (
+        _winnowing_windows(documents, k, w, text_col, id_col)
+        .select(id_col, "fp")
+        .distinct()
+    )
+
+
+def _winnowing_windows(
+    documents: DataFrame, k: int, w: int, text_col: str, id_col: str
+) -> DataFrame:
+    """Every FULL window's selected minimum: (id_col, _n, pos, gh, fp)
+    — the gram generator and per-doc window both winnowing tables
+    derive from."""
     toks = documents.repartition(id_col).select(
         id_col, words(F.col(text_col)).alias("ws")
     )
@@ -1390,11 +1382,8 @@ def winnowing_fingerprints(
         ).alias("pos", "gh"),
     )
     mwin = Window.partitionBy(id_col).orderBy("pos").rowsBetween(0, w - 1)
-    return (
-        grams.withColumn("fp", F.min("gh").over(mwin))
-        .filter(F.col("pos") <= F.col("_n") - w)
-        .select(id_col, "fp")
-        .distinct()
+    return grams.withColumn("fp", F.min("gh").over(mwin)).filter(
+        F.col("pos") <= F.col("_n") - w
     )
 
 
@@ -1414,28 +1403,11 @@ def winnowing_fingerprint_positions(
     overlap is).  A fingerprint selected in several places brackets
     them; window-start positions locate the match within w−1 grams.
 
-    Output: (id_col, fp, first_pos, last_pos).  Same scale shape as
-    winnowing_fingerprints — the grouped min/max replaces the
-    distinct, both one aggregation on the doc-partitioned key; the
-    gram count likewise rides from size(ws) instead of a second
-    window pass (r17)."""
-    toks = documents.repartition(id_col).select(
-        id_col, words(F.col(text_col)).alias("ws")
-    )
-    grams = toks.filter(F.size("ws") >= k).select(
-        id_col,
-        (F.size("ws") - (k - 1)).alias("_n"),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(1), F.size("ws") - (k - 1)),
-                lambda i: F.md5(F.concat_ws(" ", F.slice(F.col("ws"), i, k))),
-            )
-        ).alias("pos", "gh"),
-    )
-    mwin = Window.partitionBy(id_col).orderBy("pos").rowsBetween(0, w - 1)
+    Output: (id_col, fp, first_pos, last_pos) — one grouped min/max
+    on the doc-partitioned key over winnowing_fingerprints' window
+    table."""
     return (
-        grams.withColumn("fp", F.min("gh").over(mwin))
-        .filter(F.col("pos") <= F.col("_n") - w)
+        _winnowing_windows(documents, k, w, text_col, id_col)
         .groupBy(id_col, "fp")
         .agg(
             F.min("pos").cast("bigint").alias("first_pos"),
@@ -1461,42 +1433,24 @@ def winnowing_match_spans(
     several separated passages brackets them all).  Same candidate
     semantics as winnowing_near_dup_pairs: hot fingerprints capped at
     `hot_fp_cap` distinct carriers BEFORE the self-join, pairs with
-    ≥ `min_shared` shared fingerprints.
-
-    Scale shape: the positions table feeds the cap + both join sides,
-    so it is materialized once (localCheckpoint, the pair-join
-    precedent); the join is fp-bucketed and cap-bounded, the output
-    pair-sized."""
+    ≥ `min_shared` shared fingerprints.  The positions table feeds
+    the cap + both join sides, so it is materialized once
+    (localCheckpoint, the pair-join precedent)."""
     fps = winnowing_fingerprint_positions(
         documents, k=k, w=w, text_col=text_col, id_col=id_col
     ).localCheckpoint()
-    cold = (
-        fps.groupBy("fp")
-        .agg(F.countDistinct(id_col).alias("_k"))
-        .filter(F.col("_k") <= hot_fp_cap)
-        .select("fp")
-    )
-    capped = fps.join(cold, "fp", "left_semi")
-    a = capped.select(
-        F.col(id_col).alias("d1"), "fp",
-        F.col("first_pos").alias("_f1"), F.col("last_pos").alias("_l1"),
-    )
-    b = capped.select(
-        F.col(id_col).alias("d2"), "fp",
-        F.col("first_pos").alias("_f2"), F.col("last_pos").alias("_l2"),
-    )
-    return (
-        a.join(b, "fp")
-        .filter(F.col("d1") < F.col("d2"))
-        .groupBy("d1", "d2")
-        .agg(
+    return shared_key_pairs(
+        cap_hot_keys(fps, ["fp"], id_col, hot_fp_cap), ["fp"], id_col,
+        left=[F.col("first_pos").alias("_f1"), F.col("last_pos").alias("_l1")],
+        right=[F.col("first_pos").alias("_f2"), F.col("last_pos").alias("_l2")],
+        aggs=[
             F.count(F.lit(1)).alias("n_shared"),
             F.min("_f1").alias("d1_first"),
             F.max("_l1").alias("d1_last"),
             F.min("_f2").alias("d2_first"),
             F.max("_l2").alias("d2_last"),
-        )
-        .filter(F.col("n_shared") >= min_shared)
+        ],
+        having=F.col("n_shared") >= min_shared,
     )
 
 
@@ -1553,15 +1507,10 @@ def cdc_containment(
     totals = chunks.groupBy(id_col).agg(
         F.sum("n_words").alias("d1_words")
     )
-    a = chunks.select(
-        F.col(id_col).alias("d1"), "chunk_hash", "n_words"
-    )
-    b = chunks.select(F.col(id_col).alias("d2"), "chunk_hash")
-    shared = (
-        a.join(b, "chunk_hash")
-        .filter(F.col("d1") != F.col("d2"))
-        .groupBy("d1", "d2")
-        .agg(F.sum("n_words").alias("shared_words"))
+    shared = match_increment(
+        chunks.select(F.col(id_col).alias("d1"), "chunk_hash", "n_words"),
+        chunks.select(F.col(id_col).alias("d2"), "chunk_hash"),
+        ["chunk_hash"], ("d1", "d2"), [F.sum("n_words").alias("shared_words")],
     )
     return (
         shared.join(totals.withColumnRenamed(id_col, "d1"), "d1")
@@ -1630,12 +1579,8 @@ def winnowing_matches_incremental(
         new_docs, k=k, w=w, text_col=text_col, id_col=id_col
     ).select(F.col(id_col).alias("d_new"), "fp")
     idx = index.select(F.col(id_col).alias("d_corpus"), "fp")
-    return (
-        nf.join(idx, "fp")
-        .filter(F.col("d_new") != F.col("d_corpus"))
-        .groupBy("d_new", "d_corpus")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+    return match_increment(
+        nf, idx, ["fp"], ("d_new", "d_corpus"), **shares_at_least(min_shared)
     )
 
 
@@ -1655,11 +1600,8 @@ def winnowing_near_dup_pairs(
     same hot-key guard every bucketed detector here applies
     (corpus-wide boilerplate phrases would otherwise fan the
     self-join quadratically; real overlap between a PAIR rides rarer
-    fingerprints).
-
-    Scale shape: fingerprint table (a 2/(w+1) fraction of the k-gram
-    table) → hot-fp cap BEFORE the self-join → join fan-out bounded
-    by max_docs_per_fp² per fingerprint → one (d1, d2) count."""
+    fingerprints), bounding the join fan-out at max_docs_per_fp² per
+    fingerprint."""
     # localCheckpoint, not the session-auto strategy: this is a QUERY
     # (one ephemeral materialization), and the fingerprint table feeds
     # THREE consumers below (the cap count and both self-join sides) —
@@ -1668,21 +1610,9 @@ def winnowing_near_dup_pairs(
     fps = winnowing_fingerprints(
         documents, k=k, w=w, text_col=text_col, id_col=id_col
     ).localCheckpoint(eager=True)
-    cold = (
-        fps.groupBy("fp")
-        .agg(F.countDistinct(id_col).alias("_nd"))
-        .filter(F.col("_nd") <= max_docs_per_fp)
-        .select("fp")
-    )
-    capped = fps.join(cold, "fp", "left_semi")
-    a = capped.select(F.col("fp"), F.col(id_col).alias("d1"))
-    b = capped.select(F.col("fp"), F.col(id_col).alias("d2"))
-    return (
-        a.join(b, "fp")
-        .filter(F.col("d1") < F.col("d2"))
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+    return shared_key_pairs(
+        cap_hot_keys(fps, ["fp"], id_col, max_docs_per_fp), ["fp"], id_col,
+        **shares_at_least(min_shared),
     )
 
 

@@ -34,6 +34,22 @@ import struct
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from datawarehouse_code_spark.operators.buckets import match_increment
+from datawarehouse_code_spark.operators.media_dedup import (
+    PHASH_SIZE,
+    _BAND_KEY,
+    _BAND_STACK,
+    _BANDS,
+    _capped_band_index,
+    _decode_map,
+    _explode_bands,
+    _fp_share_matches,
+    _fp_share_pairs,
+    _hamming_verify,
+    dhash_bits,
+    phash_bits,
+)
+
 VIDEO_MAGIC = b"VID0"
 VIDEO_MAX_FRAMES = 4096
 VIDEO_MAX_FRAME_BYTES = 1 << 24
@@ -105,7 +121,6 @@ def video_frame_band_tuples(
     both from the same tuples guarantees a video's grams and its
     frame index rows can never disagree about what a frame hashes
     to."""
-    from datawarehouse_code_spark.operators.media_dedup import dhash_bits
     from datawarehouse_code_spark.operators.multimodal import decode_image
 
     out = []
@@ -144,36 +159,21 @@ def video_fingerprints(media: DataFrame, gram: int = 2) -> DataFrame:
     narrow Arrow-batched map — frames and pixels never leave the
     worker, only (media_id, fp) does.  `gram` is the index contract —
     increments must pass the same value."""
-    import pandas as pd
-
-    def batches(it):
-        for pdf in it:
-            ids, fps = [], []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                if content is None:
-                    continue
-                frames = decode_video_frames(bytes(content))
-                for fp in set(video_fp_strings(frames, gram)):
-                    ids.append(media_id)
-                    fps.append(fp)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "fp": pd.Series(fps, dtype=object),
-                }
-            )
-
-    return media.mapInPandas(batches, VIDEO_FP_SCHEMA).distinct()
+    return _decode_map(
+        media, _decode_frame_tuples, _gram_rows(gram), VIDEO_FP_SCHEMA
+    ).distinct()
 
 
-def _cap_hot(fps: DataFrame, cap: int) -> DataFrame:
-    """Distinct-carrier hot-fingerprint cap (the black-frame-loop
-    guard) — delegates to media_dedup._cap_hot_fps, the ONE cap
-    implementation, so the grain can never drift between modalities
-    (r13 consolidation)."""
-    from datawarehouse_code_spark.operators.media_dedup import _cap_hot_fps
+def _decode_frame_tuples(payload: bytes) -> list[tuple[int, int, int, int]]:
+    """Container walk + per-frame decode + dHash — one decode step, so
+    any bad frame fails (or quarantines) the whole video."""
+    return video_frame_band_tuples(decode_video_frames(payload))
 
-    return _cap_hot_fps(fps, cap)
+
+def _gram_rows(gram: int):
+    """Frame band tuples → the video's distinct temporal grams as
+    (fp,) rows."""
+    return lambda tuples: [(fp,) for fp in set(_gram_strings(tuples, gram))]
 
 
 def video_near_dup_pairs(
@@ -190,15 +190,8 @@ def video_near_dup_pairs(
     both join sides) and is materialized once via localCheckpoint,
     the winnowing precedent — without it the container walk and every
     frame decode re-run per consumer."""
-    fps = _cap_hot(video_fingerprints(media, gram).localCheckpoint(), hot_cap)
-    a = fps.select(F.col("media_id").alias("d1"), "fp")
-    b = fps.select(F.col("media_id").alias("d2"), "fp")
-    return (
-        a.join(b, "fp")
-        .filter(F.col("d1") < F.col("d2"))
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+    return _fp_share_pairs(
+        video_fingerprints(media, gram).localCheckpoint(), min_shared, hot_cap
     )
 
 
@@ -221,18 +214,8 @@ def video_matches_incremental(
     index: (d_new, d_corpus, n_shared) — the increment decodes and
     fingerprints itself, the corpus rides the equi-join, cost ∝
     |increment|.  `gram` must match the index build."""
-    inc = video_fingerprints(new_media, gram).select(
-        F.col("media_id").alias("d_new"), "fp"
-    )
-    idx = _cap_hot(index, hot_cap).select(
-        F.col("media_id").alias("d_corpus"), "fp"
-    )
-    return (
-        inc.join(idx, "fp")
-        .filter(F.col("d_new") != F.col("d_corpus"))
-        .groupBy("d_new", "d_corpus")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+    return _fp_share_matches(
+        video_fingerprints(new_media, gram), index, min_shared, hot_cap
     )
 
 
@@ -248,32 +231,10 @@ def _frame_rows_map(media: DataFrame, tuples_fn) -> DataFrame:
     walk, the narrow Arrow shape and the output schema live in
     exactly one place (a fix to either lane cannot desynchronize the
     frame alignment the cross-modal matrix assumes)."""
-    import pandas as pd
-
-    def batches(it):
-        for pdf in it:
-            ids, idxs, bands = [], [], []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                if content is None:
-                    continue
-                for j, t in tuples_fn(
-                    decode_video_frames(bytes(content))
-                ):
-                    ids.append(media_id)
-                    idxs.append(j)
-                    bands.append(t)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "b0": pd.Series([b[0] for b in bands], dtype="int32"),
-                    "b1": pd.Series([b[1] for b in bands], dtype="int32"),
-                    "b2": pd.Series([b[2] for b in bands], dtype="int32"),
-                    "b3": pd.Series([b[3] for b in bands], dtype="int32"),
-                }
-            )
-
-    return media.mapInPandas(batches, VIDEO_FRAME_DHASH_SCHEMA)
+    return _decode_map(
+        media, lambda payload: tuples_fn(decode_video_frames(payload)),
+        lambda pairs: [(j, *t) for j, t in pairs], VIDEO_FRAME_DHASH_SCHEMA,
+    )
 
 
 def video_frame_dhashes(media: DataFrame) -> DataFrame:
@@ -305,40 +266,18 @@ def video_image_matches(
     frame within `max_hamming` of a corpus image.  Closes the
     modality blind spot where a still image re-used inside a video was
     undetectable (video fingerprints gram ≥2 frames; images never saw
-    frames at all).
-
-    Scale shape is the incremental-matcher's: the videos are decoded
-    and hashed fresh (cost ∝ |videos| frames), the image corpus rides
-    the band equi-join and is never re-decoded; hot index buckets are
-    capped at `band_cap` distinct images BEFORE the join (read-time,
-    replay-idempotent), so a constant-color frame meets at most
-    `band_cap` images per band.  Bucket-then-verify: band collisions
-    only propose candidates, the exact 64-bit hamming filter decides."""
-    from datawarehouse_code_spark.operators.media_dedup import (
-        _cap_hot_bands,
-        _hamming64,
-    )
-
+    frames at all).  An increment-vs-index band match
+    (buckets.match_increment): hot index buckets are capped at
+    `band_cap` distinct images, so a constant-color frame meets at
+    most `band_cap` images per band."""
     frames = frame_hashes.select(
-        F.col("media_id").alias("video_id"), "frame_idx",
-        "b0", "b1", "b2", "b3",
-        F.expr(
-            "stack(4, 0, b0, 1, b1, 2, b2, 3, b3) AS (band_idx, band_val)"
-        ),
+        F.col("media_id").alias("video_id"), "frame_idx", *_BANDS,
+        F.expr(_BAND_STACK),
     )
-    idx = _cap_hot_bands(image_index, band_cap).select(
-        F.col("media_id").alias("image_id"), "band_idx", "band_val",
-        *[F.col(f"b{k}").alias(f"c{k}") for k in range(4)],
-    )
-    return (
-        frames.join(idx, ["band_idx", "band_val"])
-        .withColumn("hamming", _hamming64())
-        .groupBy("video_id", "frame_idx", "image_id")
-        .agg(
-            F.count(F.lit(1)).cast("int").alias("n_shared_bands"),
-            F.min("hamming").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
+    return match_increment(
+        frames, _capped_band_index(image_index, band_cap, "image_id"),
+        _BAND_KEY, ("video_id", "frame_idx", "image_id"),
+        exclude_self=False, **_hamming_verify(max_hamming),
     )
 
 
@@ -353,38 +292,10 @@ def video_fingerprints_quarantine(
     with fp NULL and the error string — a video is fingerprinted
     all-or-nothing (partial fingerprints would under-match silently);
     healthy media yield their distinct grams with decode_error NULL."""
-    import pandas as pd
-
-    def batches(it):
-        for pdf in it:
-            ids, fps, errs = [], [], []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                if content is None:
-                    ids.append(media_id)
-                    fps.append(None)
-                    errs.append("null payload")
-                    continue
-                try:
-                    frames = decode_video_frames(bytes(content))
-                    grams = set(video_fp_strings(frames, gram))
-                except (ValueError, NotImplementedError) as e:
-                    ids.append(media_id)
-                    fps.append(None)
-                    errs.append(f"{type(e).__name__}: {e}")
-                    continue
-                for fp in grams:
-                    ids.append(media_id)
-                    fps.append(fp)
-                    errs.append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "fp": pd.Series(fps, dtype=object),
-                    "decode_error": pd.Series(errs, dtype=object),
-                }
-            )
-
-    return media.mapInPandas(batches, VIDEO_FP_QUARANTINE_SCHEMA).distinct()
+    return _decode_map(
+        media, _decode_frame_tuples, _gram_rows(gram),
+        VIDEO_FP_QUARANTINE_SCHEMA,
+    ).distinct()
 
 
 def build_frame_dhash_index(frame_hashes: DataFrame) -> DataFrame:
@@ -399,10 +310,7 @@ def build_frame_dhash_index(frame_hashes: DataFrame) -> DataFrame:
     forget_index_rows(id_col='media_id') — deleting a video drops
     all its frame rows."""
     return frame_hashes.select(
-        "media_id", "frame_idx", "b0", "b1", "b2", "b3",
-        F.expr(
-            "stack(4, 0, b0, 1, b1, 2, b2, 3, b3) AS (band_idx, band_val)"
-        ),
+        "media_id", "frame_idx", *_BANDS, F.expr(_BAND_STACK)
     )
 
 
@@ -419,37 +327,18 @@ def image_video_matches(
     arriving after its constituent image; this covers the image
     arriving after the video — without it the detection is
     order-dependent, which a crawl's arrival order must never decide.
-
-    Same scale shape: the increment (`new_hashes`, an image_dhash
-    output) is hashed fresh, the video corpus rides the band
-    equi-join and is never re-decoded; hot frame-index buckets are
-    capped at `band_cap` distinct VIDEOS before the join (a
-    black-frame loop across the corpus is the hot key); band
-    collisions only propose, the exact 64-bit hamming decides."""
-    from datawarehouse_code_spark.operators.media_dedup import (
-        _cap_hot_bands,
-        _explode_bands,
-        _hamming64,
-    )
-
+    Same band match with `new_hashes` (an image_dhash output) as the
+    increment; hot frame-index buckets are capped at `band_cap`
+    distinct VIDEOS (a black-frame loop across the corpus is the hot
+    key)."""
     inc = _explode_bands(new_hashes).select(
-        F.col("media_id").alias("image_id"), "band_idx", "band_val",
-        "b0", "b1", "b2", "b3",
+        F.col("media_id").alias("image_id"), *_BAND_KEY, *_BANDS,
     )
-    idx = _cap_hot_bands(frame_index, band_cap).select(
-        F.col("media_id").alias("video_id"), "frame_idx",
-        "band_idx", "band_val",
-        *[F.col(f"b{k}").alias(f"c{k}") for k in range(4)],
-    )
-    return (
-        inc.join(idx, ["band_idx", "band_val"])
-        .withColumn("hamming", _hamming64())
-        .groupBy("image_id", "video_id", "frame_idx")
-        .agg(
-            F.count(F.lit(1)).cast("int").alias("n_shared_bands"),
-            F.min("hamming").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
+    return match_increment(
+        inc,
+        _capped_band_index(frame_index, band_cap, "video_id", "frame_idx"),
+        _BAND_KEY, ("image_id", "video_id", "frame_idx"),
+        exclude_self=False, **_hamming_verify(max_hamming),
     )
 
 
@@ -477,52 +366,14 @@ def video_fingerprints_frames_quarantine(
     fingerprints would under-match silently).  Healthy rows are
     already distinct per media: grams are set()-deduped in the
     worker, frame rows are unique by (media_id, frame_idx)."""
-    import pandas as pd
+    def rows(tuples):
+        grams = [(fp, None, None, None, None, None)
+                 for fp in set(_gram_strings(tuples, gram))]
+        return grams + [(None, j, *t) for j, t in enumerate(tuples)]
 
-    def batches(it):
-        for pdf in it:
-            rows = {k: [] for k in
-                    ("media_id", "fp", "frame_idx", "b0", "b1", "b2", "b3",
-                     "err")}
-
-            def emit(media_id, fp=None, frame_idx=None, bands=(None,) * 4,
-                     err=None):
-                rows["media_id"].append(media_id)
-                rows["fp"].append(fp)
-                rows["frame_idx"].append(frame_idx)
-                for k in range(4):
-                    rows[f"b{k}"].append(bands[k])
-                rows["err"].append(err)
-
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                if content is None:
-                    emit(media_id, err="null payload")
-                    continue
-                try:
-                    tuples = video_frame_band_tuples(
-                        decode_video_frames(bytes(content))
-                    )
-                except (ValueError, NotImplementedError) as e:
-                    emit(media_id, err=f"{type(e).__name__}: {e}")
-                    continue
-                for fp in set(_gram_strings(tuples, gram)):
-                    emit(media_id, fp=fp)
-                for j, t in enumerate(tuples):
-                    emit(media_id, frame_idx=j, bands=t)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(rows["media_id"], dtype="int64"),
-                    "fp": pd.Series(rows["fp"], dtype=object),
-                    "frame_idx": pd.array(rows["frame_idx"], dtype="Int32"),
-                    **{
-                        c: pd.array(rows[c], dtype="Int32")
-                        for c in ("b0", "b1", "b2", "b3")
-                    },
-                    "decode_error": pd.Series(rows["err"], dtype=object),
-                }
-            )
-
-    return media.mapInPandas(batches, VIDEO_FPS_FRAMES_QUARANTINE_SCHEMA)
+    return _decode_map(
+        media, _decode_frame_tuples, rows, VIDEO_FPS_FRAMES_QUARANTINE_SCHEMA
+    )
 
 
 def video_frame_phashes(media: DataFrame) -> DataFrame:
@@ -539,10 +390,6 @@ def video_frame_phashes(media: DataFrame) -> DataFrame:
     image_video_matches / video_image_matches — the band machinery is
     layout-generic; keep pHash frame indexes SEPARATE from dHash
     frame indexes (unrelated band spaces)."""
-    from datawarehouse_code_spark.operators.media_dedup import (
-        PHASH_SIZE,
-        phash_bits,
-    )
     from datawarehouse_code_spark.operators.multimodal import decode_image
 
     def tuples(frames):

@@ -23,6 +23,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from datawarehouse_code_spark.sources.schemas import EVENTS
 
@@ -256,6 +257,18 @@ def click_attribution_stream(
     ).select("click_id", "user_id", "click_ts", "view_ts", "view_value")
 
 
+def _drain(
+    stream: DataFrame, apply, checkpoint_dir: str | None
+) -> StreamingQuery:
+    """Start draining `stream` through foreachBatch(`apply`) with the
+    availableNow trigger (checkpointed at `checkpoint_dir` when given)
+    and return the started query."""
+    writer = stream.writeStream.foreachBatch(apply).trigger(availableNow=True)
+    if checkpoint_dir is not None:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    return writer.start()
+
+
 def run_upsert_to_table(
     events: DataFrame,
     target_path: str,
@@ -319,10 +332,7 @@ def run_upsert_to_table(
             owner=checkpoint_dir,
         )
 
-    writer = events.writeStream.foreachBatch(_apply).trigger(availableNow=True)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
+    q = _drain(events, _apply, checkpoint_dir)
     try:
         q.awaitTermination()
     finally:
@@ -431,10 +441,7 @@ def run_corpus_ingest(
                 owner=checkpoint_dir,
             )
 
-    writer = docs.writeStream.foreachBatch(_apply).trigger(availableNow=True)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    writer.start().awaitTermination()
+    _drain(docs, _apply, checkpoint_dir).awaitTermination()
 
 
 def run_cdc_index_ingest(
@@ -458,98 +465,56 @@ def run_cdc_index_ingest(
     higher-chunk_idx rows behind as phantom index entries.  Dropping
     the doc's rows before inserting the fresh chunking closes that —
     at the same cost (both are one anti-join + union on the parquet
-    path).
-
-    Exactly-once: the chunking is a pure function of the text, so a
-    checkpoint replay re-derives identical rows — the keyed replace
-    makes it a no-op.  The
-    hot-chunk cap is deliberately NOT applied at ingest (an
-    append-only stream can only push a chunk past the cap
-    monotonically, so an ingest-time cap would make replays
-    order-dependent); readers apply operators/text.cap_hot_chunks at
-    query time, which the batch build also routes through.
+    path).  Exactly-once, the read-time hot-chunk cap and `n_buckets`
+    follow _run_index_ingest.
 
     Scale shape per batch: content_defined_chunks' narrow pipeline
     over the batch (cost ∝ |batch|) + one keyed upsert; the corpus is
-    never re-chunked.  `n_buckets` opts a NEWLY-created index into
-    the bucket-partitioned layout (sources/bucketed.py) — the replace
-    then rewrites only the hash buckets holding the batch's doc_ids
-    instead of the whole index, and readers go through read_bucketed.
-    An existing table keeps its own layout either way
-    (replace_keyed_auto's stickiness rule)."""
+    never re-chunked."""
+    _run_index_ingest(
+        docs, index_path, lambda b: _batch_chunks(b, min_words),
+        checkpoint_dir, n_buckets=n_buckets, id_col="doc_id",
+    )
+
+
+def _batch_chunks(docs: DataFrame, min_words: int) -> DataFrame:
+    """A batch's ≥ `min_words`-word content-defined chunks as index
+    rows: (doc_id, chunk_idx, chunk_hash, n_words)."""
     from datawarehouse_code_spark.operators.text import (
         content_defined_chunks,
     )
-    from datawarehouse_code_spark.sources.bucketed import (
-        replace_keyed_auto,
-    )
 
-    def _apply(batch: DataFrame, _batch_id: int) -> None:
-        sp = batch.sparkSession
-        chunks = content_defined_chunks(batch).filter(
-            F.col("n_words") >= min_words
-        ).select("doc_id", "chunk_idx", "chunk_hash", "n_words")
-        # keys = the BATCH's ids, not the (min_words-filtered)
-        # chunk rows' — a doc re-delivered with revised text whose
-        # chunks ALL fall below min_words contributes zero update
-        # rows yet must still shed its old index rows (r13 fix)
-        replace_keyed_auto(
-            sp, index_path, chunks, ["doc_id"],
-            keys=batch.select("doc_id"), n_buckets=n_buckets,
-            owner=checkpoint_dir,
-        )
-
-    writer = docs.writeStream.foreachBatch(_apply).trigger(availableNow=True)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    writer.start().awaitTermination()
+    return content_defined_chunks(docs).filter(
+        F.col("n_words") >= min_words
+    ).select("doc_id", "chunk_idx", "chunk_hash", "n_words")
 
 
-def _pair_share_rejects(
-    fps: DataFrame, key: str, id_col: str, min_shared: int
+def _gate_rejects(
+    sp: SparkSession,
+    index_path: str,
+    id_col: str,
+    pairs: DataFrame,
+    matches,
 ) -> DataFrame:
-    """Batch-internal rejects of a share-count gate: the LARGER id of
-    every pair sharing ≥ `min_shared` matching `key` rows (OCCURRENCE
-    grain — a doc carrying the same chunk twice shares two rows,
-    exactly the count(*) grain of cdc_matches_incremental /
-    cdc_shared_chunks; the fp inputs are distinct-per-media upstream,
-    so occurrence ≡ distinct there).  Smaller-id drop rule, PER-PAIR
-    counts — groupBy BOTH ids: min_shared is a pair threshold,
-    matching the batch detectors; counting across partners would
-    reject an item sharing one key each with several unrelated items
-    (the r12 gate bug, fixed everywhere by this single
-    implementation)."""
-    a = fps.select(F.col(id_col).alias("_d1"), key)
-    b = fps.select(F.col(id_col).alias("_d2"), key)
-    return (
-        a.join(b, key)
-        .filter(F.col("_d1") < F.col("_d2"))
-        .groupBy("_d1", "_d2")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") >= min_shared)
-        .select(F.col("_d2").alias(id_col))
-        .distinct()
-    )
+    """The ONE reject builder every near-dup gate shares (`id_col`
+    rows): the larger id (d2) of every batch-internal pair in `pairs`
+    (the smaller-id drop rule) ∪ the d_new of every `matches(index)`
+    row against the persisted index at `index_path`, when it exists.
+    Both legs are the batch detectors' own join-and-count bodies, so
+    thresholds are PER-PAIR (counting across partners would reject an
+    item sharing one key each with several unrelated items — the r12
+    gate bug), and the index leg excludes self-matches by id, so
+    crash replays whose survivors already reached the index pass."""
+    from datawarehouse_code_spark.sources.acid import table_exists
+    from datawarehouse_code_spark.sources.bucketed import read_keyed_table
 
-
-def _cross_share_rejects(
-    fps: DataFrame, idx: DataFrame, key: str, id_col: str, min_shared: int
-) -> DataFrame:
-    """Cross-index rejects of a share-count gate: batch items sharing
-    ≥ `min_shared` matching `key` rows with an already-ingested item
-    (occurrence grain, as in _pair_share_rejects — the batch
-    detectors' count(*) contract; self-matches excluded by id, so
-    crash replays whose survivors already reached the index still
-    pass)."""
-    return (
-        fps.join(idx.select(F.col(id_col).alias("_dc"), key), key)
-        .filter(F.col(id_col) != F.col("_dc"))
-        .groupBy(id_col, "_dc")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") >= min_shared)
-        .select(id_col)
-        .distinct()
-    )
+    rejected = pairs.select(F.col("d2").alias(id_col)).distinct()
+    if table_exists(sp, index_path):
+        cross = matches(read_keyed_table(sp, index_path))
+        rejected = rejected.unionByName(
+            cross.select(F.col("d_new").alias(id_col)).distinct()
+        ).distinct()
+    return rejected
 
 
 def _chunk_gate_rejects(
@@ -561,90 +526,125 @@ def _chunk_gate_rejects(
 ) -> DataFrame:
     """The CDC gate's per-batch reject set (doc_id rows): batch-
     internal smaller-id pairs ∪ cross-matches against the hot-capped
-    persisted chunk index."""
-    from datawarehouse_code_spark.operators.text import cap_hot_chunks
-    from datawarehouse_code_spark.sources.acid import table_exists
-    from datawarehouse_code_spark.sources.bucketed import read_keyed_table
-
-    rejected = _pair_share_rejects(chunks, "chunk_hash", "doc_id", min_shared)
-    if table_exists(sp, index_path):
-        idx = cap_hot_chunks(
-            read_keyed_table(sp, index_path).select("doc_id", "chunk_hash"),
-            hot_chunk_cap,
-        )
-        rejected = rejected.unionByName(
-            _cross_share_rejects(
-                chunks, idx, "chunk_hash", "doc_id", min_shared
-            )
-        ).distinct()
-    return rejected
-
-
-def _fp_gate_rejects(
-    sp: SparkSession,
-    fps: DataFrame,
-    index_path: str,
-    min_shared: int,
-    hot_cap: int,
-) -> DataFrame:
-    """The fingerprint gates' per-batch reject set (media_id rows) —
-    audio grams, video temporal grams, or any detector whose index is
-    distinct (media_id, fp).  The batch side of the self-join is
-    hot-capped with _cap_hot_fps (the ONE distinct-carrier cap
-    implementation) and the index side is capped at read time."""
-    from datawarehouse_code_spark.operators.media_dedup import _cap_hot_fps
-    from datawarehouse_code_spark.sources.acid import table_exists
-    from datawarehouse_code_spark.sources.bucketed import read_keyed_table
-
-    rejected = _pair_share_rejects(
-        _cap_hot_fps(fps, hot_cap), "fp", "media_id", min_shared
+    persisted chunk index (occurrence grain — a doc carrying the same
+    chunk twice shares two rows, the count(*) grain of
+    cdc_matches_incremental / cdc_shared_chunks)."""
+    from datawarehouse_code_spark.operators.buckets import (
+        cap_hot_keys,
+        match_increment,
+        shared_key_pairs,
+        shares_at_least,
     )
-    if table_exists(sp, index_path):
-        idx = _cap_hot_fps(read_keyed_table(sp, index_path), hot_cap)
-        rejected = rejected.unionByName(
-            _cross_share_rejects(fps, idx, "fp", "media_id", min_shared)
-        ).distinct()
-    return rejected
+
+    def matches(index: DataFrame) -> DataFrame:
+        idx = cap_hot_keys(
+            index.select("doc_id", "chunk_hash"), ["chunk_hash"], "doc_id",
+            hot_chunk_cap,
+        ).select(F.col("doc_id").alias("d_corpus"), "chunk_hash")
+        return match_increment(
+            chunks.select(F.col("doc_id").alias("d_new"), "chunk_hash"), idx,
+            ["chunk_hash"], ("d_new", "d_corpus"),
+            **shares_at_least(min_shared),
+        )
+
+    pairs = shared_key_pairs(
+        chunks, ["chunk_hash"], "doc_id", **shares_at_least(min_shared)
+    )
+    return _gate_rejects(sp, index_path, "doc_id", pairs, matches)
 
 
-def _dhash_gate_rejects(
-    sp: SparkSession,
-    hashes: DataFrame,
-    index_path: str,
-    max_hamming: int,
-    band_cap: int,
-    grid: int,
-) -> DataFrame:
-    """The perceptual image gate's per-batch reject set (media_id
-    rows): the larger id of every batch-internal dHash near-dup pair
-    ∪ batch items within `max_hamming` of an already-ingested image
-    through the read-time-capped band index."""
+def _band_gate_legs(hashes: DataFrame, max_hamming: int, band_cap: int):
+    """(pairs, matches) of the perceptual band gate over an
+    image_dhash-layout hash table, for _gate_rejects."""
     from datawarehouse_code_spark.operators.media_dedup import (
         dhash_matches_incremental,
         dhash_near_dup_pairs,
     )
-    from datawarehouse_code_spark.sources.acid import table_exists
-    from datawarehouse_code_spark.sources.bucketed import read_keyed_table
 
-    rejected = (
-        dhash_near_dup_pairs(
-            hashes, max_hamming=max_hamming, band_cap=band_cap,
-        )
-        .select(F.col("d2").alias("media_id"))
-        .distinct()
+    return (
+        dhash_near_dup_pairs(hashes, max_hamming=max_hamming, band_cap=band_cap),
+        lambda index: dhash_matches_incremental(
+            None, index, max_hamming=max_hamming, band_cap=band_cap,
+            new_hashes=hashes,
+        ),
     )
-    if table_exists(sp, index_path):
-        cross = (
-            dhash_matches_incremental(
-                None, read_keyed_table(sp, index_path),
-                max_hamming=max_hamming, band_cap=band_cap, grid=grid,
-                new_hashes=hashes,
-            )
-            .select(F.col("d_new").alias("media_id"))
-            .distinct()
+
+
+def _fp_gate_legs(fps: DataFrame, min_shared: int, hot_cap: int):
+    """(pairs, matches) of a fingerprint-share gate over distinct
+    (media_id, fp) rows, for _gate_rejects — the audio/video
+    detectors' own bodies, both sides hot-capped at `hot_cap`.  The
+    rows are distinct per media upstream, so the occurrence-grain
+    share count is the distinct-fingerprint count."""
+    from datawarehouse_code_spark.operators.media_dedup import (
+        _fp_share_matches,
+        _fp_share_pairs,
+    )
+
+    return (
+        _fp_share_pairs(fps, min_shared, hot_cap),
+        lambda index: _fp_share_matches(fps, index, min_shared, hot_cap),
+    )
+
+
+def _run_gated_ingest(
+    stream: DataFrame,
+    target_path: str,
+    index_path: str,
+    id_col: str,
+    rows_fn,
+    rejects_fn,
+    index_rows_fn=None,
+    checkpoint_dir: str | None = None,
+    n_buckets: int | None = None,
+) -> None:
+    """The ONE per-batch loop of the single-modality near-dup gates:
+    rows = `rows_fn(batch)` (the batch's chunk / hash / fingerprint
+    rows) → rejected = `rejects_fn(sp, rows)` → survivors (batch anti
+    rejected) upsert into `target_path` → the survivors' rows
+    (`index_rows_fn` applied, when given) REPLACE their ids' rows in
+    `index_path`.  Rejects enter NEITHER table nor index, so replays
+    reject the same ids deterministically (dedup-BEFORE-extend: later
+    arrivals resolve to indexed survivors, never to rejects).
+
+    Crash ordering: the table upsert commits BEFORE the index
+    extend; a crash between them replays the batch, whose items pass
+    the gate unchanged (self-matches are excluded by id, and the
+    missing index rows are re-derived from the same payloads),
+    re-upsert identically, and complete the index — idempotent either
+    way.  `n_buckets` opts NEWLY-created table+index into the
+    bucket-partitioned layout (both writes then prune to the batch's
+    id buckets); existing tables keep their own layout either way
+    (stickiness)."""
+    from datawarehouse_code_spark.sources.bucketed import (
+        replace_keyed_auto,
+        upsert_auto,
+    )
+
+    def _apply(batch: DataFrame, _batch_id: int) -> None:
+        sp = batch.sparkSession
+        rows = rows_fn(batch)
+        rejected = rejects_fn(sp, rows)
+        survivors = batch.join(rejected, id_col, "left_anti")
+        upsert_auto(
+            sp, target_path, survivors, [id_col], n_buckets=n_buckets,
+            owner=checkpoint_dir,
         )
-        rejected = rejected.unionByName(cross).distinct()
-    return rejected
+        kept = rows.join(rejected, id_col, "left_anti")
+        # replace (not row-upsert): a surviving item re-delivered with
+        # fewer rows must not leave stale rows behind.  keys =
+        # SURVIVOR ids (not the kept rows' — a survivor whose revised
+        # payload yields zero rows still sheds its old ones; not the
+        # whole batch's — rejects keep their previously-ingested
+        # version in both table and index, per rejects-enter-neither)
+        replace_keyed_auto(
+            sp, index_path,
+            kept if index_rows_fn is None else index_rows_fn(kept),
+            [id_col], keys=survivors.select(id_col), n_buckets=n_buckets,
+            owner=checkpoint_dir,
+        )
+
+    _drain(stream, _apply, checkpoint_dir).awaitTermination()
 
 
 def run_cdc_gated_ingest(
@@ -664,64 +664,17 @@ def run_cdc_gated_ingest(
     REJECT any doc sharing ≥ `min_shared` (≥ `min_words`-word)
     chunks with an already-INGESTED doc or with a smaller-id
     batch-mate (the SemDeDup smaller-id drop convention).  Survivors
-    upsert into `target_path` and their chunks extend the index at
-    `index_path` — rejects enter NEITHER, so replays reject the same
-    ids deterministically (dedup-BEFORE-extend: later arrivals
-    resolve to indexed survivors, never to rejects).
-
-    Crash ordering: the table upsert commits BEFORE the index
-    extend; a crash between them replays the batch, whose docs pass
-    the gate unchanged (self-matches are excluded by doc id, and the
-    missing index rows are re-derived from the same text), re-upsert
-    identically, and complete the index — idempotent either way.
-
-    Scale shape per batch: the batch's narrow chunking + one
-    equi-join against the hot-capped index (per-chunk fan-out
-    bounded) + one batch-internal hash self-join + two keyed
-    upserts; the corpus is never re-chunked.  `n_buckets` opts
-    NEWLY-created table+index into the bucket-partitioned layout
-    (both writes then prune to the batch's doc_id buckets); existing
-    tables keep their own layout either way (stickiness)."""
-    from datawarehouse_code_spark.operators.text import (
-        content_defined_chunks,
-    )
-    from datawarehouse_code_spark.sources.bucketed import (
-        replace_keyed_auto,
-        upsert_auto,
-    )
-
-    def _apply(batch: DataFrame, _batch_id: int) -> None:
-        sp = batch.sparkSession
-        chunks = content_defined_chunks(batch).filter(
-            F.col("n_words") >= min_words
-        ).select("doc_id", "chunk_idx", "chunk_hash", "n_words")
-        rejected = _chunk_gate_rejects(
+    and their chunks land through _run_gated_ingest (crash ordering,
+    replace-not-upsert, `n_buckets`); the corpus is never
+    re-chunked."""
+    _run_gated_ingest(
+        docs, target_path, index_path, "doc_id",
+        lambda batch: _batch_chunks(batch, min_words),
+        lambda sp, chunks: _chunk_gate_rejects(
             sp, chunks, index_path, min_shared, hot_chunk_cap
-        )
-        survivors = batch.join(rejected, "doc_id", "left_anti")
-        upsert_auto(
-            sp, target_path, survivors, ["doc_id"], n_buckets=n_buckets,
-            owner=checkpoint_dir,
-        )
-        kept_chunks = chunks.join(rejected, "doc_id", "left_anti")
-        # replace (not row-upsert) for the same reason as
-        # run_cdc_index_ingest: a surviving doc re-delivered with
-        # fewer chunks must not leave stale higher-chunk_idx rows.
-        # keys = SURVIVOR ids (not the filtered chunk rows' — a
-        # survivor whose revised chunks all fall below min_words
-        # still sheds its old rows; not the whole batch's —
-        # rejects keep their previously-ingested version in both
-        # table and index, per rejects-enter-neither)
-        replace_keyed_auto(
-            sp, index_path, kept_chunks, ["doc_id"],
-            keys=survivors.select("doc_id"), n_buckets=n_buckets,
-            owner=checkpoint_dir,
-        )
-
-    writer = docs.writeStream.foreachBatch(_apply).trigger(availableNow=True)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    writer.start().awaitTermination()
+        ),
+        checkpoint_dir=checkpoint_dir, n_buckets=n_buckets,
+    )
 
 
 def run_to_memory(
@@ -841,10 +794,7 @@ def run_rollup_maintenance(
     def _apply(batch: DataFrame, batch_id: int) -> None:
         apply_rollup_batch(batch, batch_id, rollup_path, keys, sum_cols)
 
-    writer = facts.writeStream.foreachBatch(_apply).trigger(availableNow=True)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
+    q = _drain(facts, _apply, checkpoint_dir)
     try:
         q.awaitTermination()
     finally:
@@ -1003,10 +953,7 @@ def run_ivf_ingest(
         finally:
             new.unpersist()
 
-    writer = embeddings.writeStream.foreachBatch(_apply).trigger(availableNow=True)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    writer.start().awaitTermination()
+    _drain(embeddings, _apply, checkpoint_dir).awaitTermination()
 
 
 # Sketch-family registry for streaming maintenance: kind -> (partial
@@ -1093,10 +1040,7 @@ def run_sketch_maintenance(
     def _apply(batch: DataFrame, batch_id: int) -> None:
         apply_sketch_batch(batch, batch_id, rollup_path, keys, value_col, kind)
 
-    writer = rows.writeStream.foreachBatch(_apply).trigger(availableNow=True)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
+    q = _drain(rows, _apply, checkpoint_dir)
     try:
         q.awaitTermination()
     finally:
@@ -1104,18 +1048,19 @@ def run_sketch_maintenance(
             restore_nanos_conf(spark)
 
 
-def _run_media_index_ingest(
-    media: DataFrame,
+def _run_index_ingest(
+    stream: DataFrame,
     index_path: str,
     rows_fn,
     checkpoint_dir: str | None = None,
     n_buckets: int | None = None,
+    id_col: str = "media_id",
 ) -> None:
-    """Shared exactly-once maintenance loop for the media-keyed
-    perceptual indexes (dHash bands, audio fingerprints, video
-    fingerprints): per micro-batch of arriving media, derive the
+    """Shared exactly-once maintenance loop for the detector indexes
+    (CDC chunks, dHash/pHash bands, audio and video fingerprints,
+    frame bands): per micro-batch of arriving items, derive the
     BATCH's index rows (every one of these is a pure function of the
-    payload — no corpus state) and REPLACE each arriving media_id's
+    payload — no corpus state) and REPLACE each arriving `id_col`'s
     rows in `index_path` (sources/acid.py replace_keyed, the
     stale-row-closing upsert the CDC index ingest uses: a re-delivered
     item producing fewer rows leaves no residue).
@@ -1125,38 +1070,30 @@ def _run_media_index_ingest(
     are deliberately NOT applied at ingest (append-only maintenance
     only pushes carrier counts up; an ingest-time cap would make
     replays order-dependent) — the incremental matchers cap at read
-    time, same doctrine as cap_hot_chunks.
+    time (operators/buckets.cap_hot_keys).
 
     `n_buckets` opts a NEWLY-created index into the bucket-
     partitioned layout (sources/bucketed.py): maintenance rewrites
-    only the hash buckets containing the batch's media_ids instead of
-    the whole table — O(|touched buckets|) write amplification per
-    micro-batch, the shape a 100 TB index needs on plain parquet.
-    Readers of a bucketed index go through read_bucketed (the layout
-    column must not leak into band schemas).  An existing table keeps
-    its own layout either way (replace_keyed_auto's stickiness rule).
-    Replays stay no-ops: identical payloads re-derive identical rows
-    into the same buckets."""
+    only the hash buckets containing the batch's ids — O(|touched
+    buckets|) write amplification per micro-batch.  Readers go through
+    read_bucketed (the layout column must not leak into band schemas);
+    an existing table keeps its own layout either way (stickiness)."""
     from datawarehouse_code_spark.sources.bucketed import (
         replace_keyed_auto,
     )
 
     def _apply(batch: DataFrame, _batch_id: int) -> None:
-        sp = batch.sparkSession
-        rows = rows_fn(batch)
         # keys = the BATCH's ids — an item re-delivered too short
-        # to fingerprint contributes zero rows yet must still
-        # shed its old index rows (r13 fix)
+        # to fingerprint (or a doc whose chunks all fall below
+        # min_words) contributes zero rows yet must still shed its
+        # old index rows (r13 fix)
         replace_keyed_auto(
-            sp, index_path, rows, ["media_id"],
-            keys=batch.select("media_id"), n_buckets=n_buckets,
+            batch.sparkSession, index_path, rows_fn(batch), [id_col],
+            keys=batch.select(id_col), n_buckets=n_buckets,
             owner=checkpoint_dir,
         )
 
-    writer = media.writeStream.foreachBatch(_apply).trigger(availableNow=True)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    writer.start().awaitTermination()
+    _drain(stream, _apply, checkpoint_dir).awaitTermination()
 
 
 def run_dhash_index_ingest(
@@ -1174,7 +1111,7 @@ def run_dhash_index_ingest(
         build_dhash_index,
     )
 
-    _run_media_index_ingest(
+    _run_index_ingest(
         media, index_path,
         lambda b: build_dhash_index(b, grid=grid), checkpoint_dir,
         n_buckets=n_buckets,
@@ -1198,7 +1135,7 @@ def run_audio_fp_ingest(
         build_audio_fp_index,
     )
 
-    _run_media_index_ingest(
+    _run_index_ingest(
         media, index_path,
         lambda b: build_audio_fp_index(b, win, hop, gram, qshift),
         checkpoint_dir, n_buckets=n_buckets,
@@ -1219,7 +1156,7 @@ def run_video_fp_ingest(
         build_video_fp_index,
     )
 
-    _run_media_index_ingest(
+    _run_index_ingest(
         media, index_path,
         lambda b: build_video_fp_index(b, gram=gram), checkpoint_dir,
         n_buckets=n_buckets,
@@ -1244,7 +1181,7 @@ def run_phash_index_ingest(
         image_phash,
     )
 
-    _run_media_index_ingest(
+    _run_index_ingest(
         media, index_path,
         lambda b: build_dhash_index(
             None, hashes=image_phash(b, skip_small=True)
@@ -1269,7 +1206,7 @@ def run_frame_index_ingest(
         video_frame_dhashes,
     )
 
-    _run_media_index_ingest(
+    _run_index_ingest(
         media, index_path,
         lambda b: build_frame_dhash_index(video_frame_dhashes(b)),
         checkpoint_dir, n_buckets=n_buckets,
@@ -1292,117 +1229,26 @@ def run_dhash_gated_ingest(
     upscaled copy of an already-ingested image still matches) and
     REJECT any item within `max_hamming` of an already-INGESTED image
     or of a smaller-id batch-mate (the smaller-id drop convention
-    every dedup here uses).  Survivors upsert into `target_path` and
-    their band rows extend the index at `index_path` — rejects enter
-    NEITHER, so replays reject the same ids deterministically
-    (dedup-BEFORE-extend, the CDC-gate doctrine).
-
-    Crash ordering: the table upsert commits BEFORE the index extend;
-    a crash between them replays the batch, whose items pass the gate
-    unchanged (self-matches excluded by id; the missing index rows
-    re-derive from the same payloads), re-upsert identically, and
-    complete the index.
-
-    Scale shape per batch: one narrow decode+hash map over the batch
-    + one band equi-join against the read-time-capped index + one
-    batch-internal band self-join + two keyed writes; the corpus is
-    never re-decoded.  `n_buckets` opts NEWLY-created table+index
-    into the bucket-partitioned layout (both writes then prune to
-    the batch's media_id buckets); existing tables keep their own
-    layout either way (stickiness)."""
+    every dedup here uses).  Survivors and their band rows land
+    through _run_gated_ingest; the corpus is never re-decoded."""
     from datawarehouse_code_spark.operators.media_dedup import (
         build_dhash_index,
         image_dhash,
     )
-    from datawarehouse_code_spark.sources.bucketed import (
-        replace_keyed_auto,
-        upsert_auto,
+
+    # decode + hash the batch ONCE; every leg (internal pairs,
+    # cross-match, index extend) rides the materialized hash table
+    # through the hashes=/new_hashes= pass-throughs
+    _run_gated_ingest(
+        media, target_path, index_path, "media_id",
+        lambda batch: image_dhash(batch, grid=grid).localCheckpoint(),
+        lambda sp, hashes: _gate_rejects(
+            sp, index_path, "media_id",
+            *_band_gate_legs(hashes, max_hamming, band_cap),
+        ),
+        lambda kept: build_dhash_index(None, hashes=kept),
+        checkpoint_dir=checkpoint_dir, n_buckets=n_buckets,
     )
-
-    def _apply(batch: DataFrame, _batch_id: int) -> None:
-        sp = batch.sparkSession
-        # decode + hash the batch ONCE; every leg below (internal
-        # pairs, cross-match, index extend) rides the materialized
-        # hash table through the hashes=/new_hashes= pass-throughs
-        hashes = image_dhash(batch, grid=grid).localCheckpoint()
-        rejected = _dhash_gate_rejects(
-            sp, hashes, index_path, max_hamming, band_cap, grid
-        )
-        survivors = batch.join(rejected, "media_id", "left_anti")
-        upsert_auto(
-            sp, target_path, survivors, ["media_id"], n_buckets=n_buckets,
-            owner=checkpoint_dir,
-        )
-        kept_rows = build_dhash_index(
-            None, grid=grid,
-            hashes=hashes.join(
-                survivors.select("media_id"), "media_id", "left_semi"
-            ),
-        )
-        # keys = SURVIVOR ids (a survivor re-delivered with an
-        # undecodable/short payload keeps zero hash rows; rejects
-        # keep their previously-ingested rows — r13 fix)
-        replace_keyed_auto(
-            sp, index_path, kept_rows, ["media_id"],
-            keys=survivors.select("media_id"), n_buckets=n_buckets,
-            owner=checkpoint_dir,
-        )
-
-    writer = media.writeStream.foreachBatch(_apply).trigger(availableNow=True)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    writer.start().awaitTermination()
-
-
-def _run_fp_gated_ingest(
-    media: DataFrame,
-    target_path: str,
-    index_path: str,
-    fps_fn,
-    min_shared: int,
-    hot_cap: int,
-    checkpoint_dir: str | None = None,
-    n_buckets: int | None = None,
-) -> None:
-    """Shared fingerprint-gated media ingest (audio/video — any
-    detector whose index is distinct (media_id, fp) rows): per
-    micro-batch, fingerprint the arriving media and REJECT any item
-    sharing ≥ `min_shared` fingerprints with an already-ingested item
-    (through the read-time-capped index) or with a smaller-id
-    batch-mate.  Survivors upsert into `target_path` and their
-    fingerprints extend `index_path`; rejects enter neither, so
-    replays reject the same ids deterministically (dedup-BEFORE-
-    extend, the CDC-gate doctrine; table commit BEFORE index extend
-    for the same crash-replay argument).  `n_buckets` opts
-    NEWLY-created table+index into the bucket-partitioned layout;
-    existing tables keep their own layout either way (stickiness)."""
-    from datawarehouse_code_spark.sources.bucketed import (
-        replace_keyed_auto,
-        upsert_auto,
-    )
-
-    def _apply(batch: DataFrame, _batch_id: int) -> None:
-        sp = batch.sparkSession
-        fps = fps_fn(batch).localCheckpoint()
-        rejected = _fp_gate_rejects(sp, fps, index_path, min_shared, hot_cap)
-        survivors = batch.join(rejected, "media_id", "left_anti")
-        upsert_auto(
-            sp, target_path, survivors, ["media_id"], n_buckets=n_buckets,
-            owner=checkpoint_dir,
-        )
-        kept = fps.join(survivors.select("media_id"), "media_id", "left_semi")
-        # keys = SURVIVOR ids — an item too short to fingerprint
-        # has zero fps rows yet must shed old index rows (r13 fix)
-        replace_keyed_auto(
-            sp, index_path, kept, ["media_id"],
-            keys=survivors.select("media_id"), n_buckets=n_buckets,
-            owner=checkpoint_dir,
-        )
-
-    writer = media.writeStream.foreachBatch(_apply).trigger(availableNow=True)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    writer.start().awaitTermination()
 
 
 def run_audio_gated_ingest(
@@ -1425,10 +1271,16 @@ def run_audio_gated_ingest(
         audio_fingerprints,
     )
 
-    _run_fp_gated_ingest(
-        media, target_path, index_path,
-        lambda b: audio_fingerprints(b, win, hop, gram, qshift),
-        min_shared, hot_cap, checkpoint_dir, n_buckets=n_buckets,
+    _run_gated_ingest(
+        media, target_path, index_path, "media_id",
+        lambda b: audio_fingerprints(
+            b, win, hop, gram, qshift
+        ).localCheckpoint(),
+        lambda sp, fps: _gate_rejects(
+            sp, index_path, "media_id",
+            *_fp_gate_legs(fps, min_shared, hot_cap),
+        ),
+        checkpoint_dir=checkpoint_dir, n_buckets=n_buckets,
     )
 
 
@@ -1449,10 +1301,14 @@ def run_video_gated_ingest(
         video_fingerprints,
     )
 
-    _run_fp_gated_ingest(
-        media, target_path, index_path,
-        lambda b: video_fingerprints(b, gram),
-        min_shared, hot_cap, checkpoint_dir, n_buckets=n_buckets,
+    _run_gated_ingest(
+        media, target_path, index_path, "media_id",
+        lambda b: video_fingerprints(b, gram).localCheckpoint(),
+        lambda sp, fps: _gate_rejects(
+            sp, index_path, "media_id",
+            *_fp_gate_legs(fps, min_shared, hot_cap),
+        ),
+        checkpoint_dir=checkpoint_dir, n_buckets=n_buckets,
     )
 
 
@@ -1537,11 +1393,9 @@ def run_multimodal_gated_ingest(
       carrying them (the superset-content rule; the coverage
       rejection runs only against the corpus index).
 
-    Scale shape per batch: four narrow decode+fingerprint maps (one
-    per present modality) + one equi-join per lane against its
-    read-time-capped index + one batch-internal self-join per lane +
-    keyed writes.  Nothing re-decodes, nothing is all-pairs, and an
-    absent modality costs one empty filter.
+    Scale shape per batch: per present lane, one decode+fingerprint
+    map, one capped-index equi-join and one batch-internal self-join,
+    plus keyed writes; nothing re-decodes, nothing is all-pairs.
 
     `n_buckets` opts every NEWLY-created table this loop maintains —
     target, ledger and all indexes — into the bucket-partitioned
@@ -1554,9 +1408,6 @@ def run_multimodal_gated_ingest(
         build_dhash_index,
         image_fingerprints_quarantine,
         phash_view,
-    )
-    from datawarehouse_code_spark.operators.text import (
-        content_defined_chunks,
     )
     from datawarehouse_code_spark.operators.video_dedup import (
         build_frame_dhash_index,
@@ -1572,12 +1423,6 @@ def run_multimodal_gated_ingest(
         upsert_auto,
     )
 
-    # the combined fingerprint map's band schema pins grid=8 (the
-    # image_dhash/image_phash contract) — not a parameter (r13
-    # ADVICE: a knob that raised on every value but 8 was dead API
-    # surface)
-    grid = 8
-
     def _modality(col: F.Column) -> F.Column:
         return F.split(col, "/").getItem(0)
 
@@ -1586,7 +1431,7 @@ def run_multimodal_gated_ingest(
         rejected_parts: list[DataFrame] = []   # (media_id, modality)
         quarantined_parts: list[DataFrame] = []  # (media_id, modality, reason)
         # (index_path, rows, lane ids, key col) — the text index keeps
-        # the CDC tooling's native doc_id key so cap_hot_chunks /
+        # the CDC tooling's native doc_id key so build_cdc_index /
         # cdc_matches_incremental read it unchanged
         index_extends: list[tuple[str, DataFrame, DataFrame, str]] = []
 
@@ -1620,11 +1465,10 @@ def run_multimodal_gated_ingest(
                 F.lit("null text").alias("reason"),
             )
             quarantined_parts.append(null_docs)
-            chunks = content_defined_chunks(
+            chunks = _batch_chunks(
                 docs.filter(F.col("text").isNotNull())
-                .select(F.col("media_id").alias("doc_id"), "text")
-            ).filter(F.col("n_words") >= min_words).select(
-                "doc_id", "chunk_idx", "chunk_hash", "n_words"
+                .select(F.col("media_id").alias("doc_id"), "text"),
+                min_words,
             ).localCheckpoint()
             rejected_parts.append(
                 _chunk_gate_rejects(
@@ -1654,27 +1498,18 @@ def run_multimodal_gated_ingest(
             ihashes = ihealthy.select(
                 "media_id", "b0", "b1", "b2", "b3", "dhash"
             )
-            rejected_parts.append(
-                _dhash_gate_rejects(
-                    sp, ihashes, image_index_path, max_hamming, band_cap, grid
-                ).select("media_id", F.lit("image").alias("modality"))
-            )
-            index_extends.append(
-                (image_index_path,
-                 build_dhash_index(None, grid=grid, hashes=ihashes),
-                 images.select("media_id"), "media_id")
-            )
+            band_legs = [(ihashes, image_index_path)]
             if image_phash_index_path is not None:
-                iphashes = phash_view(ihealthy)
+                band_legs.append((phash_view(ihealthy), image_phash_index_path))
+            for hashes, path in band_legs:
                 rejected_parts.append(
-                    _dhash_gate_rejects(
-                        sp, iphashes, image_phash_index_path,
-                        max_hamming, band_cap, grid,
+                    _gate_rejects(
+                        sp, path, "media_id",
+                        *_band_gate_legs(hashes, max_hamming, band_cap),
                     ).select("media_id", F.lit("image").alias("modality"))
                 )
                 index_extends.append(
-                    (image_phash_index_path,
-                     build_dhash_index(None, grid=grid, hashes=iphashes),
+                    (path, build_dhash_index(None, hashes=hashes),
                      images.select("media_id"), "media_id")
                 )
             if (
@@ -1710,8 +1545,9 @@ def run_multimodal_gated_ingest(
                 F.col("decode_error").isNull() & F.col("fp").isNotNull()
             ).select("media_id", "fp")
             rejected_parts.append(
-                _fp_gate_rejects(
-                    sp, afps, audio_index_path, min_shared, hot_cap
+                _gate_rejects(
+                    sp, audio_index_path, "media_id",
+                    *_fp_gate_legs(afps, min_shared, hot_cap),
                 ).select("media_id", F.lit("audio").alias("modality"))
             )
             index_extends.append(
@@ -1741,8 +1577,9 @@ def run_multimodal_gated_ingest(
                 F.col("decode_error").isNull() & F.col("fp").isNotNull()
             ).select("media_id", "fp")
             rejected_parts.append(
-                _fp_gate_rejects(
-                    sp, vfps, video_index_path, min_shared, hot_cap
+                _gate_rejects(
+                    sp, video_index_path, "media_id",
+                    *_fp_gate_legs(vfps, min_shared, hot_cap),
                 ).select("media_id", F.lit("video").alias("modality"))
             )
             index_extends.append(
@@ -1771,9 +1608,7 @@ def run_multimodal_gated_ingest(
                     rejected_parts.append(
                         video_image_matches(
                             vframes,
-                            build_dhash_index(
-                                None, grid=grid, hashes=ihashes
-                            ),
+                            build_dhash_index(None, hashes=ihashes),
                             max_hamming=max_hamming, band_cap=band_cap,
                         )
                         .select(F.col("image_id").alias("media_id"))
@@ -1898,7 +1733,4 @@ def run_multimodal_gated_ingest(
             owner=checkpoint_dir,
         )
 
-    writer = feed.writeStream.foreachBatch(_apply).trigger(availableNow=True)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    writer.start().awaitTermination()
+    _drain(feed, _apply, checkpoint_dir).awaitTermination()

@@ -346,8 +346,8 @@ def test_cdc_index_ingest_bucketed_stream_equals_batch(spark, tmp_path):
     query-time hot-chunk cap (read via read_bucketed)."""
     import time
 
+    from datawarehouse_code_spark.operators.buckets import cap_hot_keys
     from datawarehouse_code_spark.operators.text import (
-        cap_hot_chunks,
         cdc_matches_incremental,
         content_defined_chunks,
     )
@@ -400,7 +400,10 @@ def test_cdc_index_ingest_bucketed_stream_equals_batch(spark, tmp_path):
     # the maintained bucketed index serves increment matching
     inc = docs.limit(5)
     served = cdc_matches_incremental(
-        inc, cap_hot_chunks(read_bucketed(spark, index_path), 5000)
+        inc,
+        cap_hot_keys(
+            read_bucketed(spark, index_path), ["chunk_hash"], "doc_id", 5000
+        ),
     )
     assert served.count() > 0  # every doc matches its own index rows
 

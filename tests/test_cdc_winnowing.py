@@ -7,6 +7,7 @@ operator's own expressions)."""
 
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from datawarehouse_code_spark.operators.text import (
@@ -341,25 +342,42 @@ def test_forget_index_rows_cdc_and_winnowing(spark, tmp_path):
         forget_index_rows(spark, str(tmp_path / "missing"), ids)
 
 
-def test_cap_hot_chunks_counts_distinct_docs(spark):
-    """The hot-chunk cap measures CARRIER count (distinct documents),
-    not occurrence count (r12 ADVICE): one document repeating a chunk
-    many times must not evict it, while a chunk carried by more than
-    `cap` distinct documents must go — the cap bounds the increment
-    join's cross-document fan-out, which repetition within one
-    document does not increase."""
-    from datawarehouse_code_spark.operators.text import cap_hot_chunks
+@pytest.mark.parametrize(
+    "id_col,key_cols",
+    [
+        ("doc_id", ["chunk_hash"]),  # CDC chunk index
+        ("media_id", ["fp"]),  # audio / video / winnowing fingerprints
+        ("media_id", ["band_idx", "band_val"]),  # dHash / pHash bands
+    ],
+    ids=["chunk_hash", "fp", "band"],
+)
+def test_cap_hot_keys_counts_distinct_carriers(spark, id_col, key_cols):
+    """The ONE hot-key cap every bucket-then-verify family rides
+    measures CARRIER count (distinct ids), not occurrence count (r12
+    ADVICE): one carrier repeating a key many times must not evict it,
+    while a key carried by more than `cap` distinct carriers must go —
+    the cap bounds the join's cross-carrier fan-out, which repetition
+    within one carrier does not increase.  Boundary: exactly `cap`
+    carriers is kept, `cap + 1` is dropped — for every key shape."""
+    from datawarehouse_code_spark.operators.buckets import cap_hot_keys
 
-    rows = [(1, "h_repeated", 3)] * 10  # one doc, ten occurrences
-    rows += [(d, "h_hot", 3) for d in range(100, 104)]  # 4 carriers
-    rows += [(d, "h_cold", 3) for d in range(200, 202)]  # 2 carriers
-    idx = spark.createDataFrame(rows, ["doc_id", "chunk_hash", "n_words"])
-    kept = {r["chunk_hash"] for r in cap_hot_chunks(idx, 3).collect()}
-    assert kept == {"h_repeated", "h_cold"}
-    # the repeated doc keeps ALL its occurrence rows (cap filters
-    # hashes, it never dedups the index)
-    n_rep = cap_hot_chunks(idx, 3).filter("chunk_hash = 'h_repeated'").count()
-    assert n_rep == 10
+    def key(name: str, i: int) -> tuple:
+        # one distinct key value per logical bucket, in the key's shape
+        return (f"h_{name}",) if len(key_cols) == 1 else (i, 1000 + i)
+
+    rows = [(1, *key("repeated", 0))] * 10  # one carrier, ten rows
+    rows += [(d, *key("hot", 1)) for d in range(100, 104)]  # cap + 1
+    rows += [(d, *key("edge", 2)) for d in range(300, 303)]  # == cap
+    rows += [(d, *key("cold", 3)) for d in range(200, 202)]  # 2
+    idx = spark.createDataFrame(rows, [id_col, *key_cols])
+    capped = cap_hot_keys(idx, key_cols, id_col, 3)
+    kept = {tuple(r[c] for c in key_cols) for r in capped.collect()}
+    assert kept == {key("repeated", 0), key("edge", 2), key("cold", 3)}
+    # the repeated carrier keeps ALL its occurrence rows (the cap
+    # filters keys, it never dedups the index)
+    assert capped.join(
+        spark.createDataFrame([key("repeated", 0)], key_cols), key_cols
+    ).count() == 10
 
 
 def test_build_cdc_index_custom_id_col(spark):

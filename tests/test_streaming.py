@@ -853,8 +853,8 @@ def test_cdc_index_ingest_stream_equals_batch(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from datawarehouse_code_spark.operators.buckets import cap_hot_keys
     from datawarehouse_code_spark.operators.text import (
-        cap_hot_chunks,
         cdc_matches_incremental,
         content_defined_chunks,
     )
@@ -911,9 +911,9 @@ def test_cdc_index_ingest_stream_equals_batch(spark, tmp_path):
     inc = spark.createDataFrame(
         [(990001, docs.orderBy("doc_id").first().text)], ["doc_id", "text"]
     )
-    idx = cap_hot_chunks(
+    idx = cap_hot_keys(
         spark.read.parquet(index_path).select("doc_id", "chunk_hash", "n_words"),
-        5000,
+        ["chunk_hash"], "doc_id", 5000,
     )
     matches = cdc_matches_incremental(inc, idx).collect()
     assert any(r["d_new"] == 990001 for r in matches)
